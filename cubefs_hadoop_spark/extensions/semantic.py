@@ -13,7 +13,7 @@ verify/topk tiers in ``similarity.py``:
   seeding (first C vectors) so the full pipeline — assignment included —
   is hash-checkable against a DuckDB oracle; production swaps the seeding
   for ``similarity.kmeans_refine`` (orthogonal to the plan shape, exactly
-  as with IVF, see similarity.py:177).
+  as with IVF, see ``similarity._seeded_centroids``).
 
 - **x13 SRP-LSH near-dup pairs** — signed-random-projection LSH (Charikar
   STOC'02): per-vector bit signature b_h = sign(dot(v, r_h)), banded into
@@ -46,7 +46,9 @@ from cubefs_hadoop_spark.extensions.similarity import (
     _cosine_with_norms,
     _DOT,
     _DOT_DUCK,
+    _dot_seq,
     _norm_expr,
+    _rank_centroids,
 )
 from cubefs_hadoop_spark.plans.materialize import barrier
 from cubefs_hadoop_spark.plans.parallelism import widen_for_cpu
@@ -60,10 +62,9 @@ from cubefs_hadoop_spark.oracle_compat import r2d
 _X12_TAU = 0.4
 _X12_C = 8
 
-_X12_ORACLE = f"""
-WITH cents AS (
-  SELECT vec_id AS cid, embedding AS cent FROM embeddings WHERE vec_id < {_X12_C}
-), asg AS (
+# SemDeDup's assign-then-prune SQL over a (cid, cent) ``cents`` CTE —
+# shared by the pinned (x12) and auto-sized (x12b) oracles.
+_X12_PRUNE_DUCK = f"""), asg AS (
   SELECT vec_id, embedding, cid FROM (
     SELECT e.vec_id, e.embedding, c.cid,
            ROW_NUMBER() OVER (PARTITION BY e.vec_id
@@ -78,6 +79,11 @@ SELECT g.vec_id, g.cid, (d.vec_id IS NULL) AS kept
 FROM asg g LEFT JOIN dups d ON g.vec_id = d.vec_id
 ORDER BY g.vec_id, g.cid, kept"""
 
+_X12_ORACLE = f"""
+WITH cents AS (
+  SELECT vec_id AS cid, embedding AS cent FROM embeddings WHERE vec_id < {_X12_C}
+{_X12_PRUNE_DUCK}"""
+
 
 def assign_clusters(
     emb: DataFrame,
@@ -88,12 +94,8 @@ def assign_clusters(
     """Nearest-centroid assignment (cosine, ties -> lowest cid) plus a
     precomputed norm column: one broadcast map-side corpus pass — the
     embedding column never shuffles to get its cluster id."""
-    w = Window.partitionBy(id_col).orderBy(F.col("d").desc(), "cid")
     return (
-        widen_for_cpu(emb, id_col)
-        .crossJoin(F.broadcast(centroids))
-        .withColumn("d", _cosine_expr(vec_col, "cent"))
-        .withColumn("rn", F.row_number().over(w))
+        _rank_centroids(widen_for_cpu(emb, id_col), centroids, id_col, vec_col)
         .filter(F.col("rn") == 1)
         .select(id_col, vec_col, "cid", _norm_expr(vec_col).alias("nrm"))
     )
@@ -125,7 +127,7 @@ def semantic_dedup(
     self-join is keyed on cid, so the shuffle co-locates clusters and the
     quadratic term is per-cluster, never global.  A production run
     persists the assignment partitioned by cid instead (exactly
-    ivf_build_index's layout, similarity.py:336) so the self-join reads
+    ``similarity.ivf_build_index``'s layout) so the self-join reads
     co-located buckets."""
     if centroids is None:
         from cubefs_hadoop_spark.extensions.similarity import (
@@ -148,10 +150,11 @@ def semantic_dedup(
     dups = (
         a.join(b, "cid")
         .filter(F.col("da") < F.col("db"))
-        # unroll=True: the in-cluster pair filter is the hot loop here —
-        # interleaved A/B measured 1.17x with the codegen dot (the one
-        # call site where unrolling wins; see _cosine_expr's docstring).
-        .filter(_cosine_with_norms("ea", "eb", "na", "nb", unroll=True) >= tau)
+        # _cosine_with_norms with the unrolled codegen dot (bit-identical
+        # value): the in-cluster pair filter is the hot loop here —
+        # interleaved A/B measured 1.17x (the one call site where
+        # unrolling wins; see _cosine_expr's docstring).
+        .filter(F.expr(f"{_dot_seq('ea', 'eb')} / (na * nb)") >= tau)
         .select(F.col("db").alias(id_col))
         .distinct()
     )
@@ -168,7 +171,7 @@ def x12_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     for any vector whose cluster holds a lower-id vector with cosine >=
     0.4.  The whole pipeline — assignment tie-breaks included — is
     bit-replicated by the DuckDB oracle (same dot/sqrt op sequence as
-    x03, see the FP contract at similarity.py:40)."""
+    x03, see the FP contract in ``similarity._cosine_expr``)."""
     emb = load(spark, sf_dir, "embeddings")
     cents = emb.filter(F.col("vec_id") < _X12_C).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cent")
@@ -185,15 +188,23 @@ _X13_BANDS = 8
 _X13_BITS = 4
 _X13_H = _X13_BANDS * _X13_BITS  # 32 hyperplanes
 
-_X13_ORACLE = f"""
-WITH hp AS (
+# The pinned signing (srp_signatures' SQL twin): ``bits`` (vec_id, band,
+# key) from the first _X13_H vectors as hyperplanes — x13 and x53.
+_SRP_BITS_DUCK = f"""WITH hp AS (
   SELECT vec_id AS h, embedding AS hv FROM embeddings WHERE vec_id < {_X13_H}
 ), bits AS (
   SELECT e.vec_id, h.h // {_X13_BITS} AS band,
          SUM(CASE WHEN {_DOT_DUCK.format(a='e.embedding', b='h.hv')} >= 0
                   THEN 1 << (h.h % {_X13_BITS}) ELSE 0 END) AS key
-  FROM embeddings e CROSS JOIN hp h GROUP BY e.vec_id, h.h // {_X13_BITS}
-), cand AS (
+  FROM embeddings e CROSS JOIN hp h GROUP BY e.vec_id, h.h // {_X13_BITS}"""
+
+# The verified pair rows (x46/x46b/x46c replace them with their own).
+_SRP_PAIRS_DUCK = f"""SELECT da, db, CAST(ROUND(c, 2) AS DECIMAL(18,2)) AS cos
+FROM ver WHERE c >= {_X13_TAU} ORDER BY da, db, cos"""
+
+# Bucket self-join + exact verify over a (vec_id, band, key) ``bits`` CTE —
+# shared by the pinned (x13) and auto-sized (x13c) oracles.
+_SRP_VERIFY_DUCK = f"""), cand AS (
   SELECT DISTINCT a.vec_id AS da, b.vec_id AS db
   FROM bits a JOIN bits b
     ON a.band = b.band AND a.key = b.key AND a.vec_id < b.vec_id
@@ -201,8 +212,11 @@ WITH hp AS (
   SELECT da, db, {_cosine_duck('x.embedding', 'y.embedding')} AS c
   FROM cand JOIN embeddings x ON x.vec_id = da
             JOIN embeddings y ON y.vec_id = db)
-SELECT da, db, CAST(ROUND(c, 2) AS DECIMAL(18,2)) AS cos
-FROM ver WHERE c >= {_X13_TAU} ORDER BY da, db, cos"""
+{_SRP_PAIRS_DUCK}"""
+
+_X13_ORACLE = f"""
+{_SRP_BITS_DUCK}
+{_SRP_VERIFY_DUCK}"""
 
 # Per-row banded SRP signature, computed entirely with JVM higher-order
 # functions against a broadcast 1-row hyperplane array: key[band] =
@@ -221,9 +235,6 @@ def srp_keys_expr(bands: int, bits: int, vec_col: str = "embedding") -> str:
         )
         + " >= 0, shiftleft(1, bi), 0)))"
     )
-
-
-_SRP_KEYS = srp_keys_expr(_X13_BANDS, _X13_BITS)
 
 
 def auto_srp_bits(n: int, target_bucket: int = 64, floor: int = 4) -> int:
@@ -265,14 +276,51 @@ def srp_neardup_pairs_auto(
         (F.row_number().over(Window.orderBy(id_col)) - 1).alias("h"),
         F.col(vec_col).alias("hv"),
     )
-    hps = hp.select(F.struct("h", "hv").alias("s")).agg(
-        F.array_sort(F.collect_list("s")).alias("hps")
-    )
-    sig = barrier(
+    return _srp_pairs(emb, hp, tau, bands, int(bits), id_col, vec_col)
+
+
+def srp_signatures(
+    emb: DataFrame,
+    hyperplanes: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    bands: int = _X13_BANDS,
+    bits: int = _X13_BITS,
+) -> DataFrame:
+    """(id, band, key) SRP bucket rows for every vector.
+
+    ``hyperplanes`` is (h, hv) with h in [0, bands*bits).  It is
+    aggregated to a single array row and broadcast, so signing is one
+    map-side corpus pass — no shuffle touches the embedding column; the
+    posexplode emits only the skinny (id, band, key) rows that feed the
+    bucket join."""
+    hp = hyperplanes.select(
+        F.struct(F.col("h"), F.col("hv")).alias("s")
+    ).agg(F.array_sort(F.collect_list("s")).alias("hps"))
+    sig = (
         widen_for_cpu(emb, id_col)
-        .crossJoin(F.broadcast(hps))
-        .select(id_col, F.expr(srp_keys_expr(bands, int(bits), vec_col)).alias("keys"))
-        .select(id_col, F.posexplode("keys").alias("band", "key"))
+        .crossJoin(F.broadcast(hp))
+        .select(id_col, F.expr(srp_keys_expr(bands, bits, vec_col)).alias("keys"))
+    )
+    return sig.select(id_col, F.posexplode("keys").alias("band", "key"))
+
+
+def _srp_pairs(
+    emb: DataFrame,
+    hyperplanes: DataFrame,
+    tau: float,
+    bands: int,
+    bits: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Sign, self-join the buckets on (band, key), exact-verify: the
+    plan both SRP entry points share (see srp_neardup_pairs)."""
+    sig = barrier(
+        srp_signatures(
+            emb, hyperplanes, id_col=id_col, vec_col=vec_col,
+            bands=bands, bits=bits,
+        )
     )
     a = sig.select(F.col(id_col).alias("da"), "band", "key")
     b = sig.select(F.col(id_col).alias("db"), "band", "key")
@@ -288,29 +336,6 @@ def srp_neardup_pairs_auto(
     return verify_pairs(
         cand, emb, tau, id_col=id_col, vec_col=vec_col
     ).distinct()
-
-
-def srp_signatures(
-    emb: DataFrame,
-    hyperplanes: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, band, key) SRP bucket rows for every vector.
-
-    ``hyperplanes`` is (h, hv) with h in [0, H).  It is aggregated to a
-    single array row and broadcast, so signing is one map-side corpus
-    pass — no shuffle touches the embedding column; the posexplode emits
-    only the skinny (id, band, key) rows that feed the bucket join."""
-    hp = hyperplanes.select(
-        F.struct(F.col("h"), F.col("hv")).alias("s")
-    ).agg(F.array_sort(F.collect_list("s")).alias("hps"))
-    sig = (
-        widen_for_cpu(emb, id_col)
-        .crossJoin(F.broadcast(hp))
-        .select(id_col, F.expr(_SRP_KEYS).alias("keys"))
-    )
-    return sig.select(id_col, F.posexplode("keys").alias("band", "key"))
 
 
 def srp_neardup_pairs(
@@ -336,28 +361,17 @@ def srp_neardup_pairs(
     space is per-bucket, never N^2; band-duplicate candidates dedupe AFTER
     the cosine gate on the skinny (da, db, c) survivors, so neither the
     wide vectors nor the ~1e6-row candidate stream ever ride a distinct's
-    shuffle — the same shuffle-width discipline as ivf_topk_indexed
-    (similarity.py:406).
+    shuffle — the same shuffle-width discipline as the IVF re-rank
+    (``similarity._cosine_rerank``).
     Signatures are referenced by both self-join sides, so they
     materialize behind a ``barrier`` — one signing pass, not two."""
     if hyperplanes is None:
         return srp_neardup_pairs_auto(
             emb, tau=tau, id_col=id_col, vec_col=vec_col
         )
-    sig = barrier(
-        srp_signatures(emb, hyperplanes, id_col=id_col, vec_col=vec_col)
+    return _srp_pairs(
+        emb, hyperplanes, tau, _X13_BANDS, _X13_BITS, id_col, vec_col
     )
-    a = sig.select(F.col(id_col).alias("da"), "band", "key")
-    b = sig.select(F.col(id_col).alias("db"), "band", "key")
-    cand = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("da") < F.col("db"))
-        .select("da", "db")
-    )
-    # distinct after the cosine gate — see srp_neardup_pairs_auto.
-    return verify_pairs(
-        cand, emb, tau, id_col=id_col, vec_col=vec_col
-    ).distinct()
 
 
 def verify_pairs(
@@ -902,20 +916,7 @@ WITH p AS (
 ), cents AS (
   SELECT vec_id AS cid, embedding AS cent FROM embeddings, p
   WHERE vec_id < p.c
-), asg AS (
-  SELECT vec_id, embedding, cid FROM (
-    SELECT e.vec_id, e.embedding, c.cid,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id
-               ORDER BY {_cosine_duck('e.embedding', 'c.cent')} DESC, c.cid) AS rn
-    FROM embeddings e CROSS JOIN cents c) WHERE rn = 1
-), dups AS (
-  SELECT DISTINCT b.vec_id
-  FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id < b.vec_id
-  WHERE {_cosine_duck('a.embedding', 'b.embedding')} >= {_X12_TAU}
-)
-SELECT g.vec_id, g.cid, (d.vec_id IS NULL) AS kept
-FROM asg g LEFT JOIN dups d ON g.vec_id = d.vec_id
-ORDER BY g.vec_id, g.cid, kept"""
+{_X12_PRUNE_DUCK}"""
 
 
 @register("x12b_semantic_dedup_auto", _X12B_ORACLE)
@@ -954,16 +955,7 @@ WITH p AS (
                   THEN 1 << (h.h % p.bits) ELSE 0 END) AS key
   FROM embeddings e CROSS JOIN hp h CROSS JOIN p
   GROUP BY e.vec_id, h.h // p.bits
-), cand AS (
-  SELECT DISTINCT a.vec_id AS da, b.vec_id AS db
-  FROM bits a JOIN bits b
-    ON a.band = b.band AND a.key = b.key AND a.vec_id < b.vec_id
-), ver AS (
-  SELECT da, db, {_cosine_duck('x.embedding', 'y.embedding')} AS c
-  FROM cand JOIN embeddings x ON x.vec_id = da
-            JOIN embeddings y ON y.vec_id = db)
-SELECT da, db, CAST(ROUND(c, 2) AS DECIMAL(18,2)) AS cos
-FROM ver WHERE c >= {_X13_TAU} ORDER BY da, db, cos"""
+{_SRP_VERIFY_DUCK}"""
 
 
 @register("x13c_srp_lsh_auto", _X13C_ORACLE)
@@ -1268,10 +1260,8 @@ def x59_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 _X46_K = 5      # neighbors kept per vector
 _X46B_DMAX = 1  # density threshold: kept iff degree <= D_MAX
 
-_X46_ORACLE = _X13_ORACLE.replace(
-    f"""SELECT da, db, CAST(ROUND(c, 2) AS DECIMAL(18,2)) AS cos
-FROM ver WHERE c >= {_X13_TAU} ORDER BY da, db, cos""",
-    f"""SELECT src, nbr, rank, CAST(ROUND(c, 2) AS DECIMAL(18,2)) AS cos
+# x46/x46c swap the SRP pair rows for the symmetrized top-k graph.
+_KNN_DUCK = f"""SELECT src, nbr, rank, CAST(ROUND(c, 2) AS DECIMAL(18,2)) AS cos
 FROM (
   SELECT src, nbr, c,
          CAST(ROW_NUMBER() OVER (PARTITION BY src ORDER BY c DESC, nbr)
@@ -1279,8 +1269,9 @@ FROM (
   FROM (SELECT da AS src, db AS nbr, c FROM ver WHERE c >= {_X13_TAU}
         UNION ALL
         SELECT db AS src, da AS nbr, c FROM ver WHERE c >= {_X13_TAU}) sym
-) rk WHERE rank <= {_X46_K} ORDER BY src, rank""",
-)
+) rk WHERE rank <= {_X46_K} ORDER BY src, rank"""
+
+_X46_ORACLE = _X13_ORACLE.replace(_SRP_PAIRS_DUCK, _KNN_DUCK)
 
 
 def knn_graph(
@@ -1332,8 +1323,7 @@ def x46_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _X46B_ORACLE = _X13_ORACLE.replace(
-    f"""SELECT da, db, CAST(ROUND(c, 2) AS DECIMAL(18,2)) AS cos
-FROM ver WHERE c >= {_X13_TAU} ORDER BY da, db, cos""",
+    _SRP_PAIRS_DUCK,
     f""", deg AS (
   SELECT src, CAST(COUNT(*) AS BIGINT) AS degree
   FROM (SELECT da AS src FROM ver WHERE c >= {_X13_TAU}
@@ -1378,19 +1368,7 @@ def x46b_density_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_X46C_ORACLE = _X13C_ORACLE.replace(
-    f"""SELECT da, db, CAST(ROUND(c, 2) AS DECIMAL(18,2)) AS cos
-FROM ver WHERE c >= {_X13_TAU} ORDER BY da, db, cos""",
-    f"""SELECT src, nbr, rank, CAST(ROUND(c, 2) AS DECIMAL(18,2)) AS cos
-FROM (
-  SELECT src, nbr, c,
-         CAST(ROW_NUMBER() OVER (PARTITION BY src ORDER BY c DESC, nbr)
-              AS BIGINT) AS rank
-  FROM (SELECT da AS src, db AS nbr, c FROM ver WHERE c >= {_X13_TAU}
-        UNION ALL
-        SELECT db AS src, da AS nbr, c FROM ver WHERE c >= {_X13_TAU}) sym
-) rk WHERE rank <= {_X46_K} ORDER BY src, rank""",
-)
+_X46C_ORACLE = _X13C_ORACLE.replace(_SRP_PAIRS_DUCK, _KNN_DUCK)
 
 
 @register("x46c_knn_graph_auto", _X46C_ORACLE)
@@ -1506,13 +1484,7 @@ def x50_semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hot bucket collapses map-side) and the output is `bands` rows.
 
 _X53_ORACLE = f"""
-WITH hp AS (
-  SELECT vec_id AS h, embedding AS hv FROM embeddings WHERE vec_id < {_X13_H}
-), bits AS (
-  SELECT e.vec_id, h.h // {_X13_BITS} AS band,
-         SUM(CASE WHEN {_DOT_DUCK.format(a='e.embedding', b='h.hv')} >= 0
-                  THEN 1 << (h.h % {_X13_BITS}) ELSE 0 END) AS key
-  FROM embeddings e CROSS JOIN hp h GROUP BY e.vec_id, h.h // {_X13_BITS}
+{_SRP_BITS_DUCK}
 ), bk AS (
   SELECT band, key, CAST(COUNT(*) AS BIGINT) AS c
   FROM bits GROUP BY band, key

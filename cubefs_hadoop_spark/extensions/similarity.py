@@ -7,11 +7,23 @@ Three tiers, mirroring how a 100 TB vector pipeline actually runs:
   Python in the loop.  Per-query top-k via window rank.
 - threshold near-dup pairs (x03b): all-pairs above a cosine threshold on a
   bounded candidate set — the verify stage after any ANN/LSH filter.
-- IVF-style partitioned ANN (ivf_topk): corpus bucketed by nearest of C
-  seeded centroids; queries probe the nprobe nearest buckets.  This is the
-  scale path: a 1000x corpus only grows bucket size, not query fan-out.
-  Approximate -> validated engine-side by recall against x03 (tests), not
-  by the SQL oracle.
+- partitioned ANN — IVF (ivf_topk, ivf_topk_indexed, ivf_topk_pinned),
+  PQ (pq_topk) and IVF-PQ (ivfpq_topk): a cheap partition-level filter,
+  then exact verification, through one set of shared stages:
+  - ``_rank_centroids`` — the broadcast-centroid cosine window that
+    both assigns vectors to buckets and picks each query's nprobe probes
+    (``_probe`` is its ids-only query form);
+  - ``_cosine_rerank`` — candidate distinct over the probed buckets
+    (query vectors kept out of its shuffle), then exact cosine top-k
+    against the broadcast queries;
+  - ``_adc_shortlist`` — PQ distance table + compressed-domain top-n;
+  - ``_adc_answer`` — the raw ADC order or the exact micro-L2 re-rank
+    of that shortlist;
+  - ``_micro_means`` + ``_replace_centroids`` — the Lloyd step, with
+    the order-free integer mean of the pinned IVF and PQ builds.
+  A 1000x corpus only grows bucket size, not query fan-out.  Approximate
+  answers are validated engine-side by recall against x03 (tests), and
+  the pinned ones by the SQL oracle too.
 
 Background: REPOSE (ICDE'21) and Odyssey (VLDB'23) in PAPERS.md — both
 distribute exact verification after a cheap partition-level filter; the
@@ -28,6 +40,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from cubefs_hadoop_spark.catalog import load
+from cubefs_hadoop_spark.plans.materialize import barrier
 from cubefs_hadoop_spark.plans.parallelism import widen_for_cpu
 from cubefs_hadoop_spark.registry import register
 from cubefs_hadoop_spark.oracle_compat import r2d
@@ -69,11 +82,7 @@ def _dot_seq(a: str, b: str) -> str:
     )
 
 
-def _dot_form(a: str, b: str, unroll: bool) -> str:
-    return _dot_seq(a, b) if unroll else _DOT.format(a=a, b=b)
-
-
-def _cosine_expr(a: str, b: str, unroll: bool = False) -> F.Column:
+def _cosine_expr(a: str, b: str) -> F.Column:
     """Inline cosine: dot / (sqrt(aa) * sqrt(bb)).
 
     FP-contract with _cosine_with_norms (ADVICE r03): both MUST evaluate
@@ -83,34 +92,31 @@ def _cosine_expr(a: str, b: str, unroll: bool = False) -> F.Column:
     helper is refactored (norm caching, fused multiply, reassociation),
     keep the op sequence identical or re-verify both driver hashes.
 
-    ``unroll`` picks between two bit-identical dot strategies (the value
-    NEVER depends on it): the compact aggregate form (default) or the
-    codegen _dot_seq form.  Measured per call site with interleaved A/B
-    at sf0.1: unrolling wins only on x12's cluster-prune path (1.17x,
-    where the in-cluster pair filter is the hot loop) and is
-    neutral-to-negative on the broadcast/IVF paths (x03 0.88x, x03c
-    0.73x, x13 0.78x, x56b 0.84x — the giant generated methods trade
-    JIT-compiled quality for size), so it is opt-in per call site."""
-    dot = _dot_form(a, b, unroll)
-    na = _dot_form(a, a, unroll)
-    nb = _dot_form(b, b, unroll)
+    The dot is the compact aggregate form.  The bit-identical codegen
+    _dot_seq form was measured per call site with interleaved A/B at
+    sf0.1: it wins only on x12's cluster-prune filter (1.17x, where the
+    in-cluster pair filter is the hot loop; semantic_dedup builds that
+    expression itself) and is neutral-to-negative on the broadcast/IVF
+    paths (x03 0.88x, x03c 0.73x, x13 0.78x, x56b 0.84x — the giant
+    generated methods trade JIT-compiled quality for size)."""
+    dot = _DOT.format(a=a, b=b)
+    na = _DOT.format(a=a, b=a)
+    nb = _DOT.format(a=b, b=b)
     return F.expr(f"{dot} / (sqrt({na}) * sqrt({nb}))")
 
 
-def _norm_expr(a: str, unroll: bool = False) -> F.Column:
+def _norm_expr(a: str) -> F.Column:
     """sqrt(dot(a,a)) — precomputed once per vector so pairwise cosine
     needs ONE dot product instead of three (norms are join-invariant;
     recomputing them per pair multiplies the hot-loop FLOPs by 3)."""
-    return F.expr(f"sqrt({_dot_form(a, a, unroll)})")
+    return F.expr(f"sqrt({_DOT.format(a=a, b=a)})")
 
 
-def _cosine_with_norms(
-    a: str, b: str, na: str, nb: str, unroll: bool = False
-) -> F.Column:
+def _cosine_with_norms(a: str, b: str, na: str, nb: str) -> F.Column:
     """Cosine with precomputed norms — na/nb are sqrt(dot(x,x)) columns,
     so the evaluated op sequence is dot / (sqrt(aa) * sqrt(bb)): bit-equal
     to _cosine_expr by construction.  See the FP-contract note there."""
-    return F.expr(f"{_dot_form(a, b, unroll)} / ({na} * {nb})")
+    return F.expr(f"{_DOT.format(a=a, b=b)} / ({na} * {nb})")
 
 
 # DuckDB twin of the same formula (sequential double accumulation in both
@@ -333,9 +339,7 @@ def kmeans_refine(
     the refinement would run over a corpus SAMPLE (centroid quality needs
     bounded data; .sample(0.001) upstream), while assignment of the full
     corpus stays one broadcast pass — same plan shapes as here."""
-    emb_type = emb.schema["embedding"].dataType
-    elem = emb_type.elementType.simpleString()
-    spark = emb.sparkSession
+    elem = emb.schema["embedding"].dataType.elementType.simpleString()
     for _ in range(max(sweeps, 0)):
         assigned = ivf_assign(emb, centroids)
         means = (
@@ -355,22 +359,24 @@ def kmeans_refine(
                 ),
             )
         )
-        rows = (
-            centroids.withColumnRenamed("cent", "old")
-            .join(means, "cid", "left")
-            .select("cid", F.coalesce("mean", "old").alias("cent"))
-            .collect()
-        )
-        centroids = spark.createDataFrame(
-            [(r["cid"], r["cent"]) for r in rows],
-            T.StructType(
-                [
-                    T.StructField("cid", T.IntegerType(), False),
-                    T.StructField("cent", emb_type, False),
-                ]
-            ),
-        )
+        centroids = _replace_centroids(centroids, means)
     return centroids
+
+
+def _rank_centroids(
+    left: DataFrame, cents: DataFrame, key: str, vec: str, cid: str = "cid"
+) -> DataFrame:
+    """The centroid window every IVF path shares: ``left`` x broadcast
+    ``cents`` (cid, cent), each ``key``'s centroids ranked by cosine of
+    ``vec`` — adds d and rn (ties -> lowest ``cid``).  Filtered on rn it
+    is assignment (key=vec_id, rn <= replication) or the nprobe probe
+    (key=q_id) — one map-side pass either way, C rows broadcast."""
+    w = Window.partitionBy(key).orderBy(F.col("d").desc(), cid)
+    return (
+        left.crossJoin(F.broadcast(cents))
+        .withColumn("d", _cosine_expr(vec, "cent"))
+        .withColumn("rn", F.row_number().over(w))
+    )
 
 
 def ivf_assign(
@@ -387,14 +393,53 @@ def ivf_assign(
     clustered (near-uniform) corpora where Lloyd sweeps alone plateau —
     index size grows by the replication factor, probe cost per query is
     unchanged."""
-    w = Window.partitionBy("vec_id").orderBy(F.col("d").desc(), "cid")
     return (
-        widen_for_cpu(emb, "vec_id")
-        .crossJoin(F.broadcast(centroids))
-        .withColumn("d", _cosine_expr("embedding", "cent"))
-        .withColumn("rn", F.row_number().over(w))
+        _rank_centroids(widen_for_cpu(emb, "vec_id"), centroids, "vec_id", "embedding")
         .filter(F.col("rn") <= replication)
         .select("vec_id", "embedding", "cid")
+    )
+
+
+def _queries(emb: DataFrame, n_queries: int, vec: str = "embedding") -> DataFrame:
+    """(q_id, q_emb): the first ``n_queries`` vectors by id."""
+    return emb.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("q_id"), F.col(vec).alias("q_emb")
+    )
+
+
+def _probe(queries: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """(q_id, cid) for each query's nprobe nearest buckets; both sides
+    broadcast-small.  Ids only: q_emb re-attaches after the candidate
+    distinct (see _cosine_rerank)."""
+    return (
+        _rank_centroids(F.broadcast(queries), cents, "q_id", "q_emb")
+        .filter(F.col("rn") <= nprobe)
+        .select("q_id", "cid")
+    )
+
+
+def _cosine_rerank(
+    probes: DataFrame, assigned: DataFrame, queries: DataFrame, k: int
+) -> DataFrame:
+    """Exact cosine top-k inside the probed buckets: (q_id, n_id, cos).
+
+    A multi-assigned vector can surface through several probed buckets,
+    so candidates dedupe on (q_id, vec_id) before scoring — also what
+    makes the full probe (x03d) reproduce brute force exactly.  The
+    distinct runs WITHOUT q_emb in the shuffle (it matches ``embedding``
+    in width, so carrying it doubles the distinct's bytes); q_emb
+    re-attaches from the broadcast-small query set after."""
+    wk = Window.partitionBy("q_id").orderBy(F.col("c").desc(), "vec_id")
+    return (
+        probes.join(assigned, "cid")
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .select("q_id", "vec_id", "embedding")
+        .distinct()
+        .join(F.broadcast(queries), "q_id")
+        .withColumn("c", _cosine_expr("q_emb", "embedding"))
+        .withColumn("rk", F.row_number().over(wk))
+        .filter(F.col("rk") <= k)
+        .select("q_id", F.col("vec_id").alias("n_id"), r2d(F.col("c")).alias("cos"))
     )
 
 
@@ -413,11 +458,9 @@ def ivf_topk(
     (nprobe/n_centroids) of brute force (times the index replication
     factor in bucket size); recall vs x03 asserted in tests (>= 0.8 at
     nprobe=4/8 with one Lloyd sweep + multi-assignment, VERDICT r04 #3).
-
-    A multi-assigned vector can surface through several probed buckets,
-    so candidates dedupe on (q_id, vec_id) before scoring — also what
-    makes the full-probe configuration (x03d) exactly reproduce brute
-    force regardless of replication."""
+    Candidates dedupe before scoring (_cosine_rerank), so the
+    full-probe configuration (x03d) exactly reproduces brute force
+    regardless of replication."""
     emb = load(spark, sf_dir, "embeddings")
     n_centroids = resolve_centroid_count(emb, n_centroids)
     if nprobe == "auto":
@@ -426,33 +469,8 @@ def ivf_topk(
         emb, _seeded_centroids(emb, n_centroids), sweeps=kmeans_sweeps
     )
     assigned = ivf_assign(emb, cents, replication=replication)
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    wp = Window.partitionBy("q_id").orderBy(F.col("d").desc(), "cid")
-    probes = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(cents))
-        .withColumn("d", _cosine_expr("q_emb", "cent"))
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("q_id", "q_emb", "cid")
-    )
-    wk = Window.partitionBy("q_id").orderBy(F.col("c").desc(), "vec_id")
-    # same shuffle-width trick as ivf_topk: dedupe without q_emb
-    cand = (
-        probes.join(assigned, "cid")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", "embedding")
-        .distinct()
-        .join(F.broadcast(queries), "q_id")
-    )
-    return (
-        cand.withColumn("c", _cosine_expr("q_emb", "embedding"))
-        .withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= k)
-        .select("q_id", F.col("vec_id").alias("n_id"), r2d(F.col("c")).alias("cos"))
-    )
+    queries = _queries(emb, n_queries)
+    return _cosine_rerank(_probe(queries, cents, nprobe), assigned, queries, k)
 
 
 def ivf_build_index(
@@ -503,42 +521,15 @@ def ivf_topk_indexed(
     restriction is then the (broadcast) probe join, and exact cosine +
     top-k runs only inside probed buckets."""
     cents = spark.read.parquet(index_path + "/_centroids")
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    wp = Window.partitionBy("q_id").orderBy(F.col("d").desc(), "cid")
-    probes = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(cents))
-        .withColumn("d", _cosine_expr("q_emb", "cent"))
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("q_id", "q_emb", "cid")
-    )
+    queries = _queries(load(spark, sf_dir, "embeddings"), n_queries)
+    probes = _probe(queries, cents, nprobe)
     probed_cids = sorted(
         {r.cid for r in probes.select("cid").distinct().collect()}
     )
     assigned = spark.read.parquet(index_path).filter(
         F.col("cid").isin(probed_cids)
     )
-    wk = Window.partitionBy("q_id").orderBy(F.col("c").desc(), "vec_id")
-    # dedupe WITHOUT q_emb in the shuffle (it matches `embedding` in
-    # width, so carrying it doubles the distinct's bytes); re-attach from
-    # the broadcast-small query set after
-    cand = (
-        probes.join(assigned, "cid")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", "embedding")
-        .distinct()
-        .join(F.broadcast(queries), "q_id")
-    )
-    return (
-        cand.withColumn("c", _cosine_expr("q_emb", "embedding"))
-        .withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= k)
-        .select("q_id", F.col("vec_id").alias("n_id"), r2d(F.col("c")).alias("cos"))
-    )
+    return _cosine_rerank(probes, assigned, queries, k)
 
 
 def _micro(c: F.Column) -> F.Column:
@@ -549,6 +540,52 @@ def _micro(c: F.Column) -> F.Column:
     scaled = c * F.lit(1000000.0)
     sign = F.when(scaled < 0, F.lit(-1)).otherwise(F.lit(1))
     return (sign * F.floor(F.abs(scaled) + F.lit(0.5))).cast("long")
+
+
+def _md5_first(emb: DataFrame, vec: str, n: int) -> list:
+    """The first ``n`` (vec_id, ``vec``) rows in md5(vec_id-as-string)
+    hex order, collected — the seed rule of the pinned builds (DuckDB
+    has md5; xxhash64 it does not).  Still TakeOrderedAndProject."""
+    return (
+        emb.select("vec_id", vec, F.md5(F.col("vec_id").cast("string")).alias("h"))
+        .orderBy("h", "vec_id")
+        .limit(n)
+        .collect()
+    )
+
+
+def _micro_means(
+    assigned: DataFrame, keys: tuple[str, ...], vec: str
+) -> DataFrame:
+    """(*keys, mean): each cluster's order-free per-dimension mean of
+    ``vec`` — per-(keys, dim) SUM of _micro BIGINTs, then one double
+    division — for the pinned IVF and PQ builds."""
+    return (
+        assigned.select(*keys, F.posexplode(vec).alias("pos", "v"))
+        .withColumn("u", _micro(F.col("v")))
+        .groupBy(*keys, "pos")
+        .agg(F.sum("u").alias("s"), F.count("*").alias("n"))
+        .withColumn(
+            "m", F.col("s").cast("double") / F.col("n") / F.lit(1000000.0)
+        )
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
+        .select(*keys, F.expr("transform(pm, x -> x.m)").alias("mean"))
+    )
+
+
+def _replace_centroids(seeds: DataFrame, means: DataFrame) -> DataFrame:
+    """The driver half of a Lloyd step: each centroid of ``seeds``
+    (*keys, cent) takes its cluster's mean from ``means`` (*keys, mean);
+    one nobody was assigned to keeps its seed.  The set is driver-sized,
+    so it is collected and rebuilt under the seeds' schema."""
+    keys = means.columns[:-1]
+    rows = (
+        seeds.join(means, keys, "left")
+        .select(*keys, F.coalesce("mean", "cent").alias("cent"))
+        .collect()
+    )
+    return seeds.sparkSession.createDataFrame(rows, seeds.schema)
 
 
 def _pinned_ivf_assignment(
@@ -567,51 +604,21 @@ def _pinned_ivf_assignment(
             "embedding"
         ),
     )
-    seed_rows = (
-        emb.select(
-            "vec_id",
-            "embedding",
-            F.md5(F.col("vec_id").cast("string")).alias("h"),
-        )
-        .orderBy("h", "vec_id")
-        .limit(n_centroids)
-        .collect()
-    )
-    cent_schema = T.StructType(
-        [
-            T.StructField("cid", T.IntegerType(), False),
-            T.StructField("cent", T.ArrayType(T.DoubleType()), False),
-        ]
-    )
     seeds = spark.createDataFrame(
-        [(i + 1, r["embedding"]) for i, r in enumerate(seed_rows)],
-        cent_schema,
+        [
+            (i + 1, r["embedding"])
+            for i, r in enumerate(_md5_first(emb, "embedding", n_centroids))
+        ],
+        T.StructType(
+            [
+                T.StructField("cid", T.IntegerType(), False),
+                T.StructField("cent", T.ArrayType(T.DoubleType()), False),
+            ]
+        ),
     )
-    # one Lloyd sweep, order-free integer arithmetic
     assigned0 = ivf_assign(emb, seeds, replication=1)
-    means = (
-        assigned0.select(
-            "cid", F.posexplode("embedding").alias("pos", "v")
-        )
-        .withColumn("u", _micro(F.col("v")))
-        .groupBy("cid", "pos")
-        .agg(F.sum("u").alias("s"), F.count("*").alias("n"))
-        .withColumn(
-            "m",
-            F.col("s").cast("double") / F.col("n") / F.lit(1000000.0),
-        )
-        .groupBy("cid")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select("cid", F.expr("transform(pm, x -> x.m)").alias("mean"))
-    )
-    cent_rows = (
-        seeds.withColumnRenamed("cent", "seed")
-        .join(means, "cid", "left")
-        .select("cid", F.coalesce("mean", "seed").alias("cent"))
-        .collect()
-    )
-    cents = spark.createDataFrame(
-        [(r["cid"], r["cent"]) for r in cent_rows], cent_schema
+    cents = _replace_centroids(
+        seeds, _micro_means(assigned0, ("cid",), "embedding")
     )
     assigned = ivf_assign(emb, cents, replication=replication)
     return emb, cents, assigned
@@ -645,36 +652,8 @@ def ivf_topk_pinned(
     emb, cents, assigned = _pinned_ivf_assignment(
         spark, sf_dir, n_centroids=n_centroids, replication=replication
     )
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    wp = Window.partitionBy("q_id").orderBy(F.col("d").desc(), "cid")
-    probes = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(cents))
-        .withColumn("d", _cosine_expr("q_emb", "cent"))
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("q_id", "cid")
-    )
-    wk = Window.partitionBy("q_id").orderBy(F.col("c").desc(), "vec_id")
-    cand = (
-        probes.join(assigned, "cid")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", "embedding")
-        .distinct()
-        .join(F.broadcast(queries), "q_id")
-    )
-    return (
-        cand.withColumn("c", _cosine_expr("q_emb", "embedding"))
-        .withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= k)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("n_id"),
-            r2d(F.col("c")).alias("cos"),
-        )
-    )
+    queries = _queries(emb, n_queries)
+    return _cosine_rerank(_probe(queries, cents, nprobe), assigned, queries, k)
 
 
 # The micro-quantized term both engines sum: half away from zero.
@@ -1018,9 +997,18 @@ def auto_pq_shortlist(n: int, frac: int = 10, floor: int = 25, cap: int = 200) -
     return max(int(floor), min(int(cap), -(-n // frac)))
 
 
-def _pq_micro(c: F.Column) -> F.Column:
-    """_micro under its PQ alias — see _micro's determinism note."""
-    return _micro(c)
+def _subvectors(
+    src: DataFrame, keys: list, vec: str, out: str
+) -> DataFrame:
+    """One row per PQ subspace: (*keys, sub, ``out``) with sub in 1..M
+    and ``out`` the sub-th _PQ_D-wide slice of ``vec``."""
+    x = src.select(
+        *keys, F.explode(F.sequence(F.lit(1), F.lit(_PQ_M))).alias("sub"), vec
+    )
+    return x.select(
+        *x.columns[:-1],
+        F.expr(f"slice({vec}, (sub - 1) * {_PQ_D} + 1, {_PQ_D})").alias(out),
+    )
 
 
 def pq_train_encode(
@@ -1037,21 +1025,7 @@ def pq_train_encode(
     md5(vec_id) hex order (each contributing its M subvectors), then
     ONE Lloyd sweep with order-free micro-integer means; empty clusters
     keep their seed."""
-    sub_expr = F.expr(f"slice(emb, (sub - 1) * {_PQ_D} + 1, {_PQ_D})")
-    subs = emb.select(
-        "vec_id",
-        F.explode(F.sequence(F.lit(1), F.lit(_PQ_M))).alias("sub"),
-        "emb",
-    ).select("vec_id", "sub", sub_expr.alias("sv"))
-
-    seed_rows = (
-        emb.select(
-            "vec_id", "emb", F.md5(F.col("vec_id").cast("string")).alias("h")
-        )
-        .orderBy("h", "vec_id")
-        .limit(n_codes)
-        .collect()
-    )
+    subs = _subvectors(emb, ["vec_id"], "emb", "sv")
     cent_schema = T.StructType(
         [
             T.StructField("sub", T.IntegerType(), False),
@@ -1062,7 +1036,7 @@ def pq_train_encode(
     seeds = spark.createDataFrame(
         [
             (s, cid, r["emb"][(s - 1) * _PQ_D : s * _PQ_D])
-            for cid, r in enumerate(seed_rows, start=1)
+            for cid, r in enumerate(_md5_first(emb, "emb", n_codes), start=1)
             for s in range(1, _PQ_M + 1)
         ],
         cent_schema,
@@ -1072,34 +1046,78 @@ def pq_train_encode(
         w = Window.partitionBy("vec_id", "sub").orderBy("dm", "cid")
         return (
             subs.join(F.broadcast(cents), "sub")
-            .withColumn(
-                "dm", _pq_micro(F.expr(_L2SQ.format(a="sv", b="cent")))
-            )
+            .withColumn("dm", _micro(F.expr(_L2SQ.format(a="sv", b="cent"))))
             .withColumn("rn", F.row_number().over(w))
             .filter("rn = 1")
             .select("vec_id", "sub", "cid", "sv")
         )
 
-    means = (
-        assign(seeds)
-        .select("sub", "cid", F.posexplode("sv").alias("pos", "v"))
-        .withColumn("u", _pq_micro(F.col("v")))
-        .groupBy("sub", "cid", "pos")
-        .agg(F.sum("u").alias("s"), F.count("*").alias("n"))
-        .withColumn(
-            "m", F.col("s").cast("double") / F.col("n") / F.lit(1000000.0)
-        )
-        .groupBy("sub", "cid")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select("sub", "cid", F.expr("transform(pm, x -> x.m)").alias("mean"))
+    cents = _replace_centroids(
+        seeds, _micro_means(assign(seeds), ("sub", "cid"), "sv")
     )
-    cents_df = (
-        seeds.join(means, ["sub", "cid"], "left")
-        .select("sub", "cid", F.coalesce("mean", "cent").alias("cent"))
-    )
-    cents = spark.createDataFrame(cents_df.collect(), cent_schema)
     codes = assign(cents).select("vec_id", "sub", "cid")
     return cents, codes
+
+
+def _adc_shortlist(
+    src: DataFrame,
+    q_id: str | F.Column,
+    vec: str,
+    cents: DataFrame,
+    codes: DataFrame,
+    n: int,
+    lists: tuple[str, ...] = (),
+) -> DataFrame:
+    """ADC top-``n`` per query in the compressed domain: (q_id, n_id, d, rk).
+
+    ``src`` rows carry the query id (``q_id``, a column) and the query
+    vector ``vec``; its M sub-vectors against the codebooks ``cents``
+    form the distance table (integer-micro L2², broadcast), and a
+    candidate's distance is the SUM of its M table entries over
+    ``codes`` (vec_id, *lists, sub, cid) — order-free BIGINT addition.
+    ``lists`` keys per-list tables (IVF-PQ's coarse ccid)."""
+    dtab = (
+        _subvectors(src, [q_id, *lists], vec, "qv")
+        .join(F.broadcast(cents), "sub")
+        .withColumn("dm", _micro(F.expr(_L2SQ.format(a="qv", b="cent"))))
+        .select("q_id", *lists, "sub", "cid", "dm")
+    )
+    ws = Window.partitionBy("q_id").orderBy("d", "n_id")
+    return (
+        codes.join(F.broadcast(dtab), [*lists, "sub", "cid"])
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .groupBy("q_id", F.col("vec_id").alias("n_id"))
+        .agg(F.sum("dm").cast("long").alias("d"))
+        .withColumn("rk", F.row_number().over(ws))
+        .filter(F.col("rk") <= n)
+    )
+
+
+def _adc_answer(
+    adc: DataFrame, emb: DataFrame, n_queries: int, k: int, rerank: bool
+) -> DataFrame:
+    """The ADC order itself, (q_id, n_id, adc_micro), or — ``rerank`` —
+    the exact micro-L2 top-k over the shortlist, (q_id, n_id, d2_micro).
+    Re-rank joins full vectors only for the shortlist (ids broadcast,
+    then the broadcast-small query vectors), never the corpus."""
+    if not rerank:
+        return adc.select(
+            "q_id", "n_id", F.col("d").alias("adc_micro")
+        ).orderBy("q_id", "adc_micro", "n_id")
+    wr = Window.partitionBy("q_id").orderBy("d2", "n_id")
+    return (
+        F.broadcast(adc.select("q_id", "n_id"))
+        .join(
+            emb.select(F.col("vec_id").alias("n_id"), F.col("emb").alias("n_emb")),
+            "n_id",
+        )
+        .join(F.broadcast(_queries(emb, n_queries, "emb")), "q_id")
+        .withColumn("d2", _micro(F.expr(_L2SQ.format(a="q_emb", b="n_emb"))))
+        .withColumn("rk", F.row_number().over(wr))
+        .filter(F.col("rk") <= k)
+        .select("q_id", "n_id", F.col("d2").alias("d2_micro"))
+        .orderBy("q_id", "d2_micro", "n_id")
+    )
 
 
 def pq_topk(
@@ -1125,58 +1143,46 @@ def pq_topk(
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("emb"),
     )
     cents, codes = pq_train_encode(spark, emb, n_codes)
+    adc = _adc_shortlist(
+        emb.filter(F.col("vec_id") < n_queries),
+        F.col("vec_id").alias("q_id"),
+        "emb",
+        cents,
+        codes,
+        shortlist if rerank else k,
+    )
+    return _adc_answer(adc, emb, n_queries, k, rerank)
 
-    sub_expr = F.expr(f"slice(emb, (sub - 1) * {_PQ_D} + 1, {_PQ_D})")
-    qsubs = (
-        emb.filter(F.col("vec_id") < n_queries)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.explode(F.sequence(F.lit(1), F.lit(_PQ_M))).alias("sub"),
-            "emb",
-        )
-        .select("q_id", "sub", sub_expr.alias("qv"))
-    )
-    dtab = (
-        qsubs.join(F.broadcast(cents), "sub")
-        .withColumn("dm", _pq_micro(F.expr(_L2SQ.format(a="qv", b="cent"))))
-        .select("q_id", "sub", "cid", "dm")
-    )
-    stage1_k = shortlist if rerank else k
-    ws = Window.partitionBy("q_id").orderBy("d", "n_id")
-    adc = (
-        codes.join(F.broadcast(dtab), ["sub", "cid"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", F.col("vec_id").alias("n_id"))
-        .agg(F.sum("dm").alias("d"))
-        .withColumn("rk", F.row_number().over(ws))
-        .filter(F.col("rk") <= stage1_k)
-    )
-    if not rerank:
-        return adc.select(
-            "q_id", "n_id", F.col("d").alias("adc_micro")
-        ).orderBy("q_id", "adc_micro", "n_id")
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
-    )
-    wr = Window.partitionBy("q_id").orderBy("d2", "n_id")
-    return (
-        F.broadcast(adc.select("q_id", "n_id"))
-        .join(emb.select(F.col("vec_id").alias("n_id"), F.col("emb").alias("n_emb")), "n_id")
-        .join(F.broadcast(queries), "q_id")
-        .withColumn(
-            "d2", _pq_micro(F.expr(_L2SQ.format(a="q_emb", b="n_emb")))
-        )
-        .withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", F.col("d2").alias("d2_micro"))
-        .orderBy("q_id", "d2_micro", "n_id")
-    )
+
+# The SQL twin of pq_train_encode over a (vec_id, sub, sv) ``subs`` CTE
+# and its ``seeds``: one micro-integer Lloyd sweep, then the encode —
+# shared by the x41 and x56 oracles.
+_MICRO_L2_SV = _MICRO_L2_DUCK.format(v=_L2SQ_DUCK.format(a="s.sv", b="c.cent"))
+_PQ_TRAIN_DUCK = f"""a0 AS (SELECT vec_id, sub, cid, sv FROM (
+        SELECT s.vec_id, s.sub, c.cid, s.sv,
+               ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
+                   ORDER BY {_MICRO_L2_SV}, c.cid) AS rn
+        FROM subs s JOIN seeds c USING (sub)) WHERE rn = 1),
+el AS (SELECT sub, cid, generate_subscripts(sv, 1) AS pos, unnest(sv) AS v
+       FROM a0),
+m AS (SELECT sub, cid, pos,
+             SUM({_MICRO_L2_DUCK.format(v='v')}) AS s, COUNT(*) AS n
+      FROM el GROUP BY sub, cid, pos),
+mm AS (SELECT sub, cid,
+              list(CAST(s AS DOUBLE) / n / 1000000.0 ORDER BY pos) AS mean
+       FROM m GROUP BY sub, cid),
+cents AS (SELECT s.sub, s.cid, COALESCE(mm.mean, s.cent) AS cent
+          FROM seeds s LEFT JOIN mm USING (sub, cid)),
+codes AS (SELECT vec_id, sub, cid FROM (
+        SELECT s.vec_id, s.sub, c.cid,
+               ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
+                   ORDER BY {_MICRO_L2_SV}, c.cid) AS rn
+        FROM subs s JOIN cents c USING (sub)) WHERE rn = 1)"""
 
 
 def _pq_cte() -> str:
     """Shared oracle CTE chain: auto-sized codebooks, training, encode,
     ADC — mirror of pq_train_encode/pq_topk (nothing pinned)."""
-    mic_sv = _MICRO_L2_DUCK.format(v=_L2SQ_DUCK.format(a="s.sv", b="c.cent"))
     mic_qv = _MICRO_L2_DUCK.format(v=_L2SQ_DUCK.format(a="q.qv", b="c.cent"))
     return f"""
 pk AS (SELECT GREATEST(16, LEAST(256, CAST(POWER(2, CEIL(LOG2(GREATEST(
@@ -1192,26 +1198,7 @@ subs AS (SELECT vec_id, CAST(u.s AS INT) AS sub,
 seeds AS (SELECT sub, CAST(rn AS INT) AS cid, sv AS cent
           FROM subs JOIN ids USING (vec_id) CROSS JOIN pk
           WHERE rn <= pk.k),
-a0 AS (SELECT vec_id, sub, cid, sv FROM (
-        SELECT s.vec_id, s.sub, c.cid, s.sv,
-               ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
-                   ORDER BY {mic_sv}, c.cid) AS rn
-        FROM subs s JOIN seeds c USING (sub)) WHERE rn = 1),
-el AS (SELECT sub, cid, generate_subscripts(sv, 1) AS pos, unnest(sv) AS v
-       FROM a0),
-m AS (SELECT sub, cid, pos,
-             SUM({_MICRO_L2_DUCK.format(v='v')}) AS s, COUNT(*) AS n
-      FROM el GROUP BY sub, cid, pos),
-mm AS (SELECT sub, cid,
-              list(CAST(s AS DOUBLE) / n / 1000000.0 ORDER BY pos) AS mean
-       FROM m GROUP BY sub, cid),
-cents AS (SELECT s.sub, s.cid, COALESCE(mm.mean, s.cent) AS cent
-          FROM seeds s LEFT JOIN mm USING (sub, cid)),
-codes AS (SELECT vec_id, sub, cid FROM (
-        SELECT s.vec_id, s.sub, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
-                   ORDER BY {mic_sv}, c.cid) AS rn
-        FROM subs s JOIN cents c USING (sub)) WHERE rn = 1),
+{_PQ_TRAIN_DUCK},
 q AS (SELECT vec_id AS q_id, sub, sv AS qv FROM subs WHERE vec_id < 5),
 dtab AS (SELECT q.q_id, c.sub, c.cid, {mic_qv} AS dm
          FROM q JOIN cents c USING (sub)),
@@ -1220,13 +1207,17 @@ adc AS (SELECT d.q_id, c.vec_id AS n_id, CAST(SUM(d.dm) AS BIGINT) AS d
         WHERE c.vec_id != d.q_id GROUP BY d.q_id, c.vec_id)"""
 
 
-_X41_ORACLE = (
-    "WITH " + _pq_cte() + """
-SELECT q_id, n_id, d AS adc_micro FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY d, n_id) AS rk
-  FROM adc)
-WHERE rk <= 5 ORDER BY q_id, adc_micro, n_id"""
-)
+def _topk_duck(src: str, d: str, out: str, k: int) -> str:
+    """Per-query top-``k`` rows of CTE ``src`` by ascending ``d`` (ties
+    -> n_id) — the SQL twin of _adc_answer's two outputs."""
+    return f"""
+SELECT q_id, n_id, {d} AS {out} FROM (
+  SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY {d}, n_id) AS rk
+  FROM {src})
+WHERE rk <= {k} ORDER BY q_id, {out}, n_id"""
+
+
+_X41_ORACLE = "WITH " + _pq_cte() + _topk_duck("adc", "d", "adc_micro", 5)
 
 
 @register("x41_pq_adc", _X41_ORACLE)
@@ -1246,11 +1237,8 @@ short AS (SELECT q_id, n_id FROM (
 rer AS (SELECT s.q_id, s.n_id,
                {_MICRO_L2_DUCK.format(v=_L2SQ_DUCK.format(a='qe.emb', b='ne.emb'))} AS d2
         FROM short s JOIN e qe ON qe.vec_id = s.q_id
-                     JOIN e ne ON ne.vec_id = s.n_id)
-SELECT q_id, n_id, d2 AS d2_micro FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY d2, n_id) AS rk
-  FROM rer)
-WHERE rk <= 5 ORDER BY q_id, d2_micro, n_id"""
+                     JOIN e ne ON ne.vec_id = s.n_id)"""
+    + _topk_duck("rer", "d2", "d2_micro", 5)
 )
 
 
@@ -1312,26 +1300,7 @@ subs AS (SELECT vec_id, CAST(u.s AS INT) AS sub, {_SUB_DUCK} AS sv
          FROM res, LATERAL unnest(range(1, {_PQ_M} + 1)) AS u(s)),
 seeds AS (SELECT sub, CAST(rn AS INT) AS cid, sv AS cent
           FROM subs JOIN ids USING (vec_id) WHERE rn <= {_X56_K}),
-a0 AS (SELECT vec_id, sub, cid, sv FROM (
-        SELECT s.vec_id, s.sub, c.cid, s.sv,
-               ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
-                   ORDER BY {_MICRO_L2_DUCK.format(v=_L2SQ_DUCK.format(a='s.sv', b='c.cent'))}, c.cid) AS rn
-        FROM subs s JOIN seeds c USING (sub)) WHERE rn = 1),
-el AS (SELECT sub, cid, generate_subscripts(sv, 1) AS pos, unnest(sv) AS v
-       FROM a0),
-m AS (SELECT sub, cid, pos,
-             SUM({_MICRO_L2_DUCK.format(v='v')}) AS s, COUNT(*) AS n
-      FROM el GROUP BY sub, cid, pos),
-mm AS (SELECT sub, cid,
-              list(CAST(s AS DOUBLE) / n / 1000000.0 ORDER BY pos) AS mean
-       FROM m GROUP BY sub, cid),
-cents AS (SELECT s.sub, s.cid, COALESCE(mm.mean, s.cent) AS cent
-          FROM seeds s LEFT JOIN mm USING (sub, cid)),
-codes AS (SELECT vec_id, sub, cid FROM (
-        SELECT s.vec_id, s.sub, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
-                   ORDER BY {_MICRO_L2_DUCK.format(v=_L2SQ_DUCK.format(a='s.sv', b='c.cent'))}, c.cid) AS rn
-        FROM subs s JOIN cents c USING (sub)) WHERE rn = 1),
+{_PQ_TRAIN_DUCK},
 probes AS (SELECT q_id, ccid, cent FROM (
     SELECT e.vec_id AS q_id, c.ccid, c.cent,
            ROW_NUMBER() OVER (PARTITION BY e.vec_id
@@ -1352,14 +1321,7 @@ adc AS (SELECT d.q_id, a.vec_id AS n_id, CAST(SUM(d.dm) AS BIGINT) AS d
         JOIN dtab d ON d.ccid = a.ccid AND d.sub = k.sub AND d.cid = k.cid
         WHERE a.vec_id != d.q_id GROUP BY d.q_id, a.vec_id)"""
 
-_X56_ORACLE = (
-    _X56_CTE
-    + f"""
-SELECT q_id, n_id, d AS adc_micro FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY d, n_id) AS rk
-  FROM adc)
-WHERE rk <= {_X56_TOPK} ORDER BY q_id, adc_micro, n_id"""
-)
+_X56_ORACLE = _X56_CTE + _topk_duck("adc", "d", "adc_micro", _X56_TOPK)
 
 _X56B_ORACLE = (
     _X56_CTE
@@ -1370,11 +1332,8 @@ rr AS (SELECT q_id, n_id FROM (
 ex AS (SELECT rr.q_id, rr.n_id,
               {_MICRO_L2_DUCK.format(v=_L2SQ_DUCK.format(a='qe.emb', b='ne.emb'))} AS d2
        FROM rr JOIN e ne ON ne.vec_id = rr.n_id
-               JOIN e qe ON qe.vec_id = rr.q_id)
-SELECT q_id, n_id, d2 AS d2_micro FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY d2, n_id) AS rk
-  FROM ex)
-WHERE rk <= {_X56_TOPK} ORDER BY q_id, d2_micro, n_id"""
+               JOIN e qe ON qe.vec_id = rr.q_id)"""
+    + _topk_duck("ex", "d2", "d2_micro", _X56_TOPK)
 )
 
 
@@ -1408,11 +1367,8 @@ def ivfpq_topk(
     cc = emb.filter(F.col("vec_id") < n_coarse).select(
         F.col("vec_id").alias("ccid"), F.col("emb").alias("cent")
     )
-    wa = Window.partitionBy("vec_id").orderBy(F.col("d").desc(), "ccid")
     asg = (
-        emb.crossJoin(F.broadcast(cc))
-        .withColumn("d", _cosine_expr("emb", "cent"))
-        .withColumn("rn", F.row_number().over(wa))
+        _rank_centroids(emb, cc, "vec_id", "emb", cid="ccid")
         .filter("rn = 1")
         .select(
             "vec_id",
@@ -1420,75 +1376,36 @@ def ivfpq_topk(
             F.zip_with("emb", "cent", lambda x, y: x - y).alias("emb"),
         )
     )
-    from cubefs_hadoop_spark.plans.materialize import barrier
-
     # the residual frame feeds PQ training AND encoding AND the final
     # list-membership join — one materialization, three readers
     res = barrier(asg)
     cents, codes = pq_train_encode(
         spark, res.select("vec_id", "emb"), n_codes
     )
-
-    wp = Window.partitionBy("q_id").orderBy(F.col("d").desc(), "ccid")
     probes = (
-        emb.filter(F.col("vec_id") < n_queries)
-        .select(F.col("vec_id").alias("q_id"), "emb")
-        .crossJoin(F.broadcast(cc))
-        .withColumn("d", _cosine_expr("emb", "cent"))
-        .withColumn("rn", F.row_number().over(wp))
+        _rank_centroids(
+            emb.filter(F.col("vec_id") < n_queries).select(
+                F.col("vec_id").alias("q_id"), "emb"
+            ),
+            cc, "q_id", "emb", cid="ccid",
+        )
         .filter(F.col("rn") <= nprobe)
         .select(
-            "q_id",
-            "ccid",
+        "q_id",
+        "ccid",
             F.zip_with("emb", "cent", lambda x, y: x - y).alias("qr"),
         )
     )
-    sub_expr = F.expr(f"slice(qr, (sub - 1) * {_PQ_D} + 1, {_PQ_D})")
-    qsubs = probes.select(
+    adc = _adc_shortlist(
+        probes,
         "q_id",
-        "ccid",
-        F.explode(F.sequence(F.lit(1), F.lit(_PQ_M))).alias("sub"),
         "qr",
-    ).select("q_id", "ccid", "sub", sub_expr.alias("qv"))
-    dtab = (
-        qsubs.join(F.broadcast(cents), "sub")
-        .withColumn("dm", _pq_micro(F.expr(_L2SQ.format(a="qv", b="cent"))))
-        .select("q_id", "ccid", "sub", "cid", "dm")
+        cents,
+        codes.join(res.select("vec_id", "ccid"), "vec_id"),
+        shortlist if rerank else k,
+        lists=("ccid",),
     )
-    ws = Window.partitionBy("q_id").orderBy("d", "n_id")
-    stage1_k = shortlist if rerank else k
-    adc = (
-        codes.join(res.select("vec_id", "ccid"), "vec_id")
-        .join(F.broadcast(dtab), ["ccid", "sub", "cid"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", F.col("vec_id").alias("n_id"))
-        .agg(F.sum("dm").cast("long").alias("d"))
-        .withColumn("rk", F.row_number().over(ws))
-        .filter(F.col("rk") <= stage1_k)
-    )
-    if not rerank:
-        return adc.select(
-            "q_id", "n_id", F.col("d").alias("adc_micro")
-        ).orderBy("q_id", "adc_micro", "n_id")
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
-    )
-    wr = Window.partitionBy("q_id").orderBy("d2", "n_id")
-    return (
-        F.broadcast(adc.select("q_id", "n_id"))
-        .join(
-            emb.select(F.col("vec_id").alias("n_id"), F.col("emb").alias("n_emb")),
-            "n_id",
-        )
-        .join(F.broadcast(queries), "q_id")
-        .withColumn(
-            "d2", _pq_micro(F.expr(_L2SQ.format(a="q_emb", b="n_emb")))
-        )
-        .withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", F.col("d2").alias("d2_micro"))
-        .orderBy("q_id", "d2_micro", "n_id")
-    )
+    return _adc_answer(adc, emb, n_queries, k, rerank)
 
 
 @register("x56_ivfpq_topk", _X56_ORACLE)

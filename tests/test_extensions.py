@@ -602,6 +602,25 @@ def test_ivf_persisted_index_prunes_partitions(spark, tmp_path):
     assert total >= 0.8, f"indexed IVF recall: {total}"
 
 
+def test_ivf_persisted_index_full_probe_is_exact(spark, tmp_path):
+    """Probing every bucket of the persisted index must reproduce the
+    brute-force top-k row for row (x03d pins the inline IVF path the
+    same way): the candidate distinct and exact cosine re-rank on the
+    indexed path are bit-equal to x03's precomputed-norm scoring."""
+    from cubefs_hadoop_spark.extensions.similarity import (
+        ivf_build_index,
+        ivf_topk_indexed,
+    )
+
+    idx = str(tmp_path / "ivf_index")
+    ivf_build_index(spark, SF_SMOKE, idx, n_centroids=8)
+    got = sorted(
+        tuple(r) for r in ivf_topk_indexed(spark, SF_SMOKE, idx, nprobe=8).collect()
+    )
+    want = sorted(tuple(r) for r in x03_topk_cosine(spark, SF_SMOKE).collect())
+    assert got == want and len(want) == 25
+
+
 def test_lsh_incremental_index_matches_full_run(spark, tmp_path):
     """Incremental dedup: probing the persisted band index with a new
     batch yields EXACTLY the candidate pairs the full-corpus run would
