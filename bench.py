@@ -4,10 +4,11 @@ Runs the headline query set at $SPARK_GRAFT_SF_DIR (default sf0.1) on
 local[$SPARK_GRAFT_CPUS], 4 timed runs per query (run 1 warms the JVM/page
 cache and is discarded; median of the remaining 3 reported — a 2-sample
 median is just a mean, which let one noisy sample inflate x02/t21 in the
-r03 record; see BASELINE.md), and prints ONE JSON line:
+r03 record; see BASELINE.md), and prints a short summary line followed
+by the full record, which is always the LAST stdout line:
 
     {"metric": "bench_total_sec", "value": N, "unit": "sec",
-     "queries": {...}, "sf": 0.1}
+     "queries": {...}, "sf": 0.1, "cpus": 4, ...}
 """
 
 from __future__ import annotations
@@ -235,10 +236,11 @@ def main() -> None:
     load_start = os.getloadavg()[0]
 
     def time_query(fn) -> float:
-        # drop any DataFrame cache a prior sample materialized (x02's
-        # band table) — each sample must pay the full pipeline, not a
-        # cache hit; Spark's CacheManager matches analyzed plans across
-        # the structurally-identical per-run DataFrames.
+        # drop any DataFrame cache a prior sample left behind — each
+        # sample must pay the full pipeline, not a cache hit: Spark's
+        # CacheManager matches analyzed plans across the
+        # structurally-identical per-run DataFrames, so one cache() in a
+        # query would turn every later sample into a cache read.
         spark.catalog.clearCache()
         t0 = time.perf_counter()
         fn(spark, sf_dir).collect()
@@ -310,10 +312,30 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        # a run on another core count is a different experiment: the
+        # record says which one it is
+        "cpus": spark.sparkContext.defaultParallelism,
         "load_1min_start": round(load_start, 2),
         "load_1min_end": round(os.getloadavg()[0], 2),
         "adjudicated": adjudicated,
     }
+    # truncation-proof summary (VERDICT r14 item 2) FIRST, then the full
+    # per-query record as the LAST stdout line: a parser reading the
+    # final line always gets the whole map, and a stdout tail that cuts
+    # the long line still keeps the summary above it
+    print(
+        json.dumps(
+            {
+                "metric": "bench_total_sec",
+                "value": out["value"],
+                "n": len(timings),
+                "unit": "sec",
+                "sf": sf,
+                "cpus": out["cpus"],
+                "summary_of_next_line": True,
+            }
+        )
+    )
     line = json.dumps(out)
     print(line)
     # also persist the full object: the driver captures only a stdout
@@ -324,23 +346,6 @@ def main() -> None:
     )
     with open(out_path, "w") as f:
         f.write(line + "\n")
-    # truncation-proof summary (VERDICT r14 item 2): a short final line
-    # that survives ANY stdout-tail window, so a truncated full line can
-    # never again leave the round-over-round comparison empty.  The full
-    # per-query line above stays the primary contract output;
-    # BENCH_out.json is the authoritative artifact (see README).
-    print(
-        json.dumps(
-            {
-                "metric": "bench_total_sec",
-                "value": out["value"],
-                "n": len(timings),
-                "unit": "sec",
-                "sf": sf,
-                "summary_of_previous_line": True,
-            }
-        )
-    )
     spark.stop()
 
 

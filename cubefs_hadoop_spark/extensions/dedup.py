@@ -14,11 +14,16 @@ Scale design (the 100 TB story):
 - SimHash reduces each doc to one 16-bit fingerprint in a single pass
   (token explode -> per-bit signed sums -> sign), so near-dup candidacy
   becomes an equality/bucket problem.
+- Every (band, key) bucket join in the engine — MinHash, SimHash, the SRP
+  pairs in semantic.py, and the incremental probes of persisted band
+  indexes — is one call to :func:`bucket_pairs`, which owns the join
+  condition, the da < db orientation, the bands frame's lazy barrier and
+  the exact gate before the single distinct.
 """
 
 from __future__ import annotations
 
-import weakref
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,14 +38,6 @@ from cubefs_hadoop_spark.plans.materialize import (
 from cubefs_hadoop_spark.plans.parallelism import widen_for_cpu
 from cubefs_hadoop_spark.registry import register
 from cubefs_hadoop_spark.oracle_compat import r2d
-
-# At most one live LSH band cache per SPARK SESSION (see
-# lsh_candidate_pairs) — session-scoped so concurrent sessions in one
-# process never unpersist each other's cache (VERDICT r04 #5).  Weak keys:
-# a stopped session's entry dies with it.
-_BANDS_CACHE: "weakref.WeakKeyDictionary[SparkSession, DataFrame]" = (
-    weakref.WeakKeyDictionary()
-)
 
 N_SEEDS = 9
 BAND_ROWS = 3  # 3 bands x 3 rows
@@ -208,41 +205,68 @@ ORDER BY da, db"""
 )
 
 
-def lsh_candidate_pairs(docs: DataFrame) -> DataFrame:
-    """(da, db) doc-id pairs sharing at least one LSH band bucket.
+def bucket_pairs(
+    bands: DataFrame,
+    index: DataFrame | None = None,
+    gate: Callable[[DataFrame], DataFrame] | None = None,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Distinct (da, db) id pairs, da < db, that share a (band, key)
+    bucket — the bucket step every LSH pair generator shares.
 
-    The pair join is on (band, key) — bucket-local, never all-pairs.  The
-    band table is cached: a plain self-join would recompute the whole
-    signature pipeline on BOTH sides.  At scale the signature table is a
-    real materialization point of the dedup pipeline; cache() expresses
-    that while keeping the plan AQE-visible (measured faster here than a
-    localCheckpoint RDD cut).  Successive calls ON THE SAME SESSION
-    unpersist the previous call's band cache so a long-lived session
-    holds at most one (ADVICE r01: the cache was never released);
-    unpersist only drops the materialization, never correctness — an
-    earlier call's returned frame recomputes if consumed later.  The
-    cache registry is keyed by SparkSession, so concurrent sessions in
-    one process never evict each other (VERDICT r04 #5)."""
-    session = docs.sparkSession
-    prev = _BANDS_CACHE.pop(session, None)
-    if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
-    bands = lsh_bands(minhash_signature(docs)).cache().alias("a")
-    _BANDS_CACHE[session] = bands
-    other = bands.alias("b")
-    return (
-        bands.join(
-            other,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .distinct()
+    ``bands`` holds (id_col, band, key) rows, plus any extra columns a
+    gate needs; each extra ``c`` rides the pairs as ``c_a``/``c_b``.
+    The join is an equi-join on (band, key), so the pair space is
+    per-bucket, never all-pairs.  Both join sides read ``bands``, so it
+    sits behind a lazy ``barrier`` — one signing pass, not two; a frame
+    the caller already cut is used as is (``is_materialized``).  The
+    checkpoint blocks are freed by Spark's ContextCleaner once the
+    frames that reference them are gone.
+
+    ``index`` is a persisted (id_col, band, key) table to probe as well:
+    the batch's (index, batch) collisions join on ``!=`` and are
+    oriented by least/greatest, since either side's id may be smaller;
+    (batch, batch) pairs come from the ``<`` self-join.  Extra columns
+    are not carried on the index side.
+
+    ``gate`` is an exact check (cosine, Hamming) applied to the
+    candidate frame BEFORE the single distinct: a pair colliding in k
+    bands yields k identical rows, so the distinct's shuffle carries only
+    the gate's survivors, never the full candidate stream."""
+    bands = barrier(bands, eager=False)
+    ia, ib = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    bucket = (F.col("a.band") == F.col("b.band")) & (
+        F.col("a.key") == F.col("b.key")
     )
+    extras = [c for c in bands.columns if c not in (id_col, "band", "key")]
+    b = bands.alias("b")
+    pairs = (
+        bands.alias("a")
+        .join(b, bucket & (ia < ib))
+        .select(
+            ia.alias("da"),
+            ib.alias("db"),
+            *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in extras for s in "ab"],
+        )
+    )
+    if index is not None:
+        cross = (
+            index.alias("a")
+            .join(b, bucket & (ia != ib))
+            .select(F.least(ia, ib).alias("da"), F.greatest(ia, ib).alias("db"))
+        )
+        pairs = cross.unionByName(pairs)
+    if gate is not None:
+        pairs = gate(pairs)
+    return pairs.distinct()
+
+
+def lsh_candidate_pairs(docs: DataFrame) -> DataFrame:
+    """(da, db) doc-id pairs sharing at least one LSH band bucket: the
+    MinHash band table through :func:`bucket_pairs`.  The band table is
+    the dedup pipeline's materialization point — both join sides read
+    it, so it is signed once behind the kernel's lazy barrier."""
+    return bucket_pairs(lsh_bands(minhash_signature(docs)))
 
 
 def lsh_build_index(docs: DataFrame, index_path: str) -> None:
@@ -273,35 +297,10 @@ def lsh_incremental_candidates(
     delta that full-corpus ``lsh_candidate_pairs`` would add for these
     docs, at the cost of signing only the batch.  The corpus-side work
     is one scan of the (small) band index, not the corpus."""
-    spark = new_docs.sparkSession
-    new_bands = barrier(
-        lsh_bands(minhash_signature(new_docs)), eager=False
+    return bucket_pairs(
+        lsh_bands(minhash_signature(new_docs)),
+        index=new_docs.sparkSession.read.parquet(index_path),
     )
-    idx = spark.read.parquet(index_path)
-    cross = (
-        idx.alias("a")
-        .join(
-            new_bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .select(
-            F.least("a.doc_id", "b.doc_id").alias("da"),
-            F.greatest("a.doc_id", "b.doc_id").alias("db"),
-        )
-    )
-    within = (
-        new_bands.alias("a")
-        .join(
-            new_bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-    )
-    return cross.unionByName(within).distinct()
 
 
 @register("x02_minhash_lsh", _X02_ORACLE)
@@ -463,7 +462,8 @@ def simhash_neardup_pairs(fp_df: DataFrame, max_hamming: int = 2) -> DataFrame:
     """Near-dup pairs by SimHash banding: split the 32-bit fingerprint into
     4 bytes; by pigeonhole, pairs within Hamming distance <= 3 share at
     least one byte band.  Join per band, then exact Hamming filter via
-    bit_count(xor).  Engine-side (tested in tests/test_dedup.py)."""
+    bit_count(xor).  Engine-side (tested in
+    tests/test_extensions.py::test_simhash_banding_sound)."""
     bands = fp_df.select(
         "doc_id",
         "fp",
@@ -479,24 +479,11 @@ def simhash_neardup_pairs(fp_df: DataFrame, max_hamming: int = 2) -> DataFrame:
             )
         ).alias("bk"),
     ).select("doc_id", "fp", "bk.band", "bk.key")
-    # self-joined below: materialize the tiny band table once instead of
-    # recomputing the simhash aggregation per side
-    bands = barrier(bands, eager=False)
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("da"),
-            F.col("b.doc_id").alias("db"),
-            F.expr("bit_count(a.fp ^ b.fp)").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+    return bucket_pairs(
+        bands,
+        gate=lambda p: p.select(
+            "da", "db", F.expr("bit_count(fp_a ^ fp_b)").alias("hamming")
+        ).filter(F.col("hamming") <= max_hamming),
     )
 
 

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cubefs_hadoop_spark.catalog import load
+from cubefs_hadoop_spark.extensions.dedup import bucket_pairs
 from cubefs_hadoop_spark.extensions.similarity import (
     _cosine_duck,
     _cosine_expr,
@@ -314,28 +315,19 @@ def _srp_pairs(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Sign, self-join the buckets on (band, key), exact-verify: the
-    plan both SRP entry points share (see srp_neardup_pairs)."""
-    sig = barrier(
-        srp_signatures(
-            emb, hyperplanes, id_col=id_col, vec_col=vec_col,
-            bands=bands, bits=bits,
-        )
+    """Sign, then bucket-join with the exact cosine verify as the gate:
+    the plan both SRP entry points share (see srp_neardup_pairs)."""
+    sig = srp_signatures(
+        emb, hyperplanes, id_col=id_col, vec_col=vec_col,
+        bands=bands, bits=bits,
     )
-    a = sig.select(F.col(id_col).alias("da"), "band", "key")
-    b = sig.select(F.col(id_col).alias("db"), "band", "key")
-    cand = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("da") < F.col("db"))
-        .select("da", "db")
+    return bucket_pairs(
+        sig,
+        gate=lambda cand: verify_pairs(
+            cand, emb, tau, id_col=id_col, vec_col=vec_col
+        ),
+        id_col=id_col,
     )
-    # Band-duplicate candidates dedupe AFTER the cosine gate: a pair that
-    # collides in k bands yields k bit-identical (da, db, c) rows, so the
-    # distinct's shuffle now carries only the tau-survivors (~1e3 rows)
-    # instead of the full candidate stream (~1e6) — guide §2.2.
-    return verify_pairs(
-        cand, emb, tau, id_col=id_col, vec_col=vec_col
-    ).distinct()
 
 
 def srp_neardup_pairs(
@@ -357,14 +349,14 @@ def srp_neardup_pairs(
     signature space (the frame must match the module's pinned
     ``_X13_BANDS``/``_X13_BITS`` geometry).
 
-    Scale: the bucket self-join is an equi-join on (band, key) — the pair
-    space is per-bucket, never N^2; band-duplicate candidates dedupe AFTER
-    the cosine gate on the skinny (da, db, c) survivors, so neither the
-    wide vectors nor the ~1e6-row candidate stream ever ride a distinct's
-    shuffle — the same shuffle-width discipline as the IVF re-rank
-    (``similarity._cosine_rerank``).
-    Signatures are referenced by both self-join sides, so they
-    materialize behind a ``barrier`` — one signing pass, not two."""
+    Scale: the bucket join is ``dedup.bucket_pairs`` — an equi-join on
+    (band, key), so the pair space is per-bucket, never N^2; the cosine
+    verify is its gate, so band-duplicate candidates dedupe AFTER it on
+    the skinny (da, db, c) survivors and neither the wide vectors nor
+    the ~1e6-row candidate stream ever ride a distinct's shuffle — the
+    same shuffle-width discipline as the IVF re-rank
+    (``similarity._cosine_rerank``).  The kernel signs once, behind its
+    lazy barrier, for both join sides."""
     if hyperplanes is None:
         return srp_neardup_pairs_auto(
             emb, tau=tau, id_col=id_col, vec_col=vec_col
@@ -424,11 +416,12 @@ def x13_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 #
 # The vector-side steady-state ingest loop (the embedding analog of the
-# x02e text-side incremental LSH index, dedup.py:225): the corpus's SRP
-# bucket rows (vec_id, band, key) persist as a parquet index — a few
-# skinny rows per vector, a fraction of corpus bytes — and each arriving
-# batch signs ONLY itself, probes the index for (corpus, new) bucket
-# collisions, self-joins for (new, new), and exact-verifies the union.
+# x02e text-side incremental LSH index, dedup.lsh_incremental_candidates):
+# the corpus's SRP bucket rows (vec_id, band, key) persist as a parquet
+# index — a few skinny rows per vector, a fraction of corpus bytes — and
+# each arriving batch signs ONLY itself, probes the index for (corpus,
+# new) bucket collisions, self-joins for (new, new) (both through
+# dedup.bucket_pairs), and exact-verifies the union.
 # Unlike x12's corpus-derived centroids, the hyperplanes are FIXED at
 # index build time, so incremental signatures stay comparable forever —
 # no re-clustering, no index rebuild, O(batch) signing per ingest.
@@ -482,38 +475,11 @@ def srp_incremental_candidates(
     full-corpus srp run would add for these vectors, at the cost of
     signing only the batch; the corpus-side work is one scan of the
     skinny index, never of the corpus embeddings."""
-    spark = new_emb.sparkSession
-    new_sig = barrier(
+    return bucket_pairs(
         srp_signatures(new_emb, hyperplanes, id_col=id_col, vec_col=vec_col),
-        eager=False,
+        index=new_emb.sparkSession.read.parquet(index_path),
+        id_col=id_col,
     )
-    idx = spark.read.parquet(index_path)
-    cross = (
-        idx.alias("a")
-        .join(
-            new_sig.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.least(f"a.{id_col}", f"b.{id_col}").alias("da"),
-            F.greatest(f"a.{id_col}", f"b.{id_col}").alias("db"),
-        )
-    )
-    within = (
-        new_sig.alias("a")
-        .join(
-            new_sig.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("da"), F.col(f"b.{id_col}").alias("db")
-        )
-    )
-    return cross.unionByName(within).distinct()
 
 
 @register("x13b_incremental_srp", _X13B_ORACLE)

@@ -23,6 +23,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -38,16 +39,13 @@ def ensure_checkpoint_dir(spark: SparkSession, path: str | None = None) -> str:
     current = sc.getCheckpointDir()
     if path is None and current is not None:
         return current
+    # conf.get(key, default) cannot raise here: an unset key yields the
+    # default, and Spark's one check (a non-null default against a
+    # registered entry's converter) never sees a None default
     if path is None:
-        try:
-            path = spark.conf.get("cfspark.checkpoint.dir", None)
-        except Exception:
-            path = None
+        path = spark.conf.get("cfspark.checkpoint.dir", None)
     if path is None:
-        try:
-            wh = spark.conf.get("spark.sql.warehouse.dir", None)
-        except Exception:
-            wh = None
+        wh = spark.conf.get("spark.sql.warehouse.dir", None)
         if wh:
             path = os.path.join(wh.removeprefix("file:"), "_checkpoints")
     if path is None:
@@ -66,7 +64,9 @@ def is_materialized(df: DataFrame) -> bool:
     try:
         plan = df._jdf.queryExecution().analyzed()
         return plan.getClass().getSimpleName() == "LogicalRDD"
-    except Exception:
+    except (AttributeError, Py4JError):
+        # a frame without a JVM plan (no ``_jdf``, e.g. Spark Connect) or
+        # a JVM call that failed: treat as not yet materialized
         return False
 
 
@@ -90,33 +90,21 @@ def barrier(
     """
     if is_materialized(df):
         return df
-    try:
-        # audit-only escape hatch (VERDICT r13 #5): with barriers
-        # disabled the probed frame exposes its FULL pipeline to
-        # explain/audit_plan — a lineage cut hides every upstream
-        # operator from the plan gate.  Semantics are unchanged
-        # (barriers only pick execution strategy); never set this for
-        # production runs — the barriered pipelines re-execute per
-        # downstream action without it.
-        if (
-            str(
-                df.sparkSession.conf.get("cfspark.barriers.disabled", "false")
-            ).lower()
-            == "true"
-        ):
-            return df
-    except Exception:
-        pass
+    conf = df.sparkSession.conf
+    # audit-only escape hatch (VERDICT r13 #5): with barriers disabled
+    # the probed frame exposes its FULL pipeline to explain/audit_plan —
+    # a lineage cut hides every upstream operator from the plan gate.
+    # Semantics are unchanged (barriers only pick execution strategy);
+    # never set this for production runs — the barriered pipelines
+    # re-execute per downstream action without it.  (conf.get with a
+    # default cannot raise: these keys are unregistered, so no converter
+    # checks the default.)
+    if conf.get("cfspark.barriers.disabled", "false").lower() == "true":
+        return df
     if reliable is None:
-        try:
-            reliable = (
-                str(
-                    df.sparkSession.conf.get("cfspark.reliable.barriers", "false")
-                ).lower()
-                == "true"
-            )
-        except Exception:
-            reliable = False
+        reliable = (
+            conf.get("cfspark.reliable.barriers", "false").lower() == "true"
+        )
     if reliable:
         ensure_checkpoint_dir(df.sparkSession)
         return df.checkpoint(eager=eager)

@@ -547,6 +547,7 @@ def _mirror_batch_cells(
     import os as _os
 
     from cubefs_hadoop_spark.extensions.dedup import (
+        bucket_pairs,
         lsh_bands,
         minhash_signature,
         mirror_pair_cells,
@@ -556,6 +557,8 @@ def _mirror_batch_cells(
     spark = batch.sparkSession
     bands_dir = _os.path.join(index_dir, "bands")
     src_dir = _os.path.join(index_dir, "sources")
+    # cut here, not only inside bucket_pairs: the bands are also
+    # published below, from the same checkpoint
     new_bands = barrier(
         lsh_bands(minhash_signature(batch.select("doc_id", text_col))),
         eager=False,
@@ -564,18 +567,8 @@ def _mirror_batch_cells(
         "doc_id", F.coalesce(source_col, F.lit("(null)")).alias("source")
     )
 
-    within = (
-        new_bands.alias("a")
-        .join(
-            new_bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-    )
+    idx = None
     src_all = new_src
-    pairs = within
     if _os.path.exists(bands_dir):
         # read only PRIOR batches' files: on a crash-replay (died after
         # publishing attempt 1's batch=N files but before the ledger
@@ -587,20 +580,6 @@ def _mirror_batch_cells(
             .filter(F.col("batch") < F.lit(int(batch_id)))
             .select("band", "key", "doc_id")
         )
-        cross = (
-            idx.alias("a")
-            .join(
-                new_bands.alias("b"),
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.key") == F.col("b.key"))
-                & (F.col("a.doc_id") != F.col("b.doc_id")),
-            )
-            .select(
-                F.least("a.doc_id", "b.doc_id").alias("da"),
-                F.greatest("a.doc_id", "b.doc_id").alias("db"),
-            )
-        )
-        pairs = cross.unionByName(within)
         src_all = (
             spark.read.parquet(src_dir)
             # same crash-replay partition prune as the band index: the
@@ -616,7 +595,7 @@ def _mirror_batch_cells(
     # otherwise the lazy cross join could list the just-written files at
     # execution time (the union-distinct would still dedupe them, but
     # the ordering should not rely on that)
-    pairs = barrier(pairs.distinct(), eager=True)
+    pairs = barrier(bucket_pairs(new_bands, index=idx), eager=True)
     cells = mirror_pair_cells(pairs, src_all)
     new_bands.write.mode("overwrite").parquet(
         _os.path.join(bands_dir, f"batch={batch_id}")

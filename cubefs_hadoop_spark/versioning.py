@@ -304,6 +304,18 @@ def _maybe_page(
     return root, written
 
 
+def _next_seq(pm: dict | None) -> int:
+    """Sequence number of a commit on top of parent manifest ``pm``.
+
+    A merge-on-read delete applies to files whose ``file_seq`` is below
+    its own seq, so seqs must grow along EVERY chain: a branch restarts
+    its version numbers at v1, and main's version lags the branch's seqs
+    after a publish.  Each manifest therefore records its ``seq`` and the
+    next commit counts on from it; a manifest written before the field
+    existed has seq == version."""
+    return int(pm.get("seq", pm["version"])) + 1 if pm else 1
+
+
 def _commit_manifest(
     table_path: str,
     manifest: dict,
@@ -627,6 +639,9 @@ def create_branch(
     manifest.update(
         {
             "version": 1,
+            # the fork counts on from the base's seq, so a branch commit
+            # sorts after every delete it inherits
+            "seq": _next_seq(bm),
             "parent": None,
             "mode": "branch",
             "base_version": base,
@@ -729,20 +744,17 @@ def fast_forward(
             "schema_ops",
         )
     }
-    watermarks = [
-        m["batch_id_max"]
-        for m in (
-            bh,
-            read_manifest(table_path, main_head, fs, light=True),
-        )
-        if "batch_id_max" in m
-    ]
+    main_m = read_manifest(table_path, main_head, fs, light=True)
+    watermarks = [m["batch_id_max"] for m in (bh, main_m) if "batch_id_max" in m]
     if watermarks:
         manifest["batch_id_max"] = max(watermarks)
     v = main_head + 1
     manifest.update(
         {
             "version": v,
+            # past both chains: a later main delete must reach every
+            # published file, whichever chain added it
+            "seq": max(_next_seq(bh), _next_seq(main_m)),
             "parent": main_head,
             "mode": "publish",
             "branch": branch,
@@ -1263,13 +1275,14 @@ def commit_staged_files(
         # committed.  Appends inherit the parent's pending deletes;
         # overwrite replaces the file set wholesale, so deletes reset.
         v = parent + 1
+        seq = _next_seq(pm if parent else None)
         file_seq: dict[str, int] = {}
         deletes: list = []
         if parent and mode == "append":
             file_seq = dict(pm.get("file_seq", {}))
             deletes = list(pm.get("deletes", []))
         for f in files:
-            file_seq[f] = v
+            file_seq[f] = seq
         # appended files keep the parent's per-file stats (stats ride the
         # FILE, not the version); overwrite starts a fresh stats map
         stats_all: dict = {}
@@ -1278,6 +1291,7 @@ def commit_staged_files(
         stats_all.update(new_stats)
         manifest = {
             "version": v,
+            "seq": seq,
             "parent": parent or None,
             "mode": mode,
             **({"stage": stage} if stage else {}),
@@ -1332,15 +1346,17 @@ def commit_delete(
         parent = vs[-1]
         pm = read_manifest(table_path, parent, fs)
         v = parent + 1
+        seq = _next_seq(pm)
         manifest = {
             "version": v,
+            "seq": seq,
             "parent": parent,
             "mode": "delete",
             "partition_by": pm.get("partition_by", []),
             "files": pm["files"],
             "file_seq": pm.get("file_seq", {}),
             "deletes": list(pm.get("deletes", []))
-            + [{"seq": v, "pred": predicate}],
+            + [{"seq": seq, "pred": predicate}],
             "ts_ms": int(time.time() * 1000),
             "schema": pm.get("schema"),
             **(
@@ -1401,16 +1417,18 @@ def commit_merge(
                 table_path,
             )
         v = parent + 1
+        seq = _next_seq(pm)
         manifest = {
             "version": v,
+            "seq": seq,
             "parent": parent,
             "mode": "merge",
             "stage": stage,
             "partition_by": [],
             "files": sorted(pm["files"] + files),
-            "file_seq": {**pm.get("file_seq", {}), **{f: v for f in files}},
+            "file_seq": {**pm.get("file_seq", {}), **{f: seq for f in files}},
             "deletes": list(pm.get("deletes", []))
-            + [{"seq": v, "eq_cols": keys, "eq_files": kfiles}],
+            + [{"seq": seq, "eq_cols": keys, "eq_files": kfiles}],
             "ts_ms": int(time.time() * 1000),
             "schema": df.schema.jsonValue(),
             **(
@@ -1813,6 +1831,7 @@ def alter_schema(
     v = parent + 1
     manifest = {
         "version": v,
+        "seq": _next_seq(pm),
         "parent": parent,
         "mode": "alter",
         "files": pm["files"],
@@ -1908,6 +1927,7 @@ def rollback(
     pm = read_manifest(table_path, parent, fs)
     manifest = {
         "version": parent + 1,
+        "seq": _next_seq(pm),
         "parent": parent,
         "mode": "rollback",
         "rollback_of": to_version,
@@ -1978,15 +1998,17 @@ def compact_version(
         spark, table_path, stage, files, stats_cols or [], fs
     )
     v = parent + 1
+    seq = _next_seq(pm)
     manifest = {
         "version": v,
+        "seq": seq,
         "parent": parent,
         "mode": "compact",
         "stage": stage,
         "files": files,
         # the rewrite read applied pending MoR deletes, so they are now
         # MATERIALIZED: fresh sequence numbers, empty delete list
-        "file_seq": {f: v for f in files},
+        "file_seq": {f: seq for f in files},
         "deletes": [],
         "partition_by": [],
         "ts_ms": int(time.time() * 1000),
@@ -2099,19 +2121,21 @@ def binpack_version(
         spark, table_path, stage, new_files, stats_cols, fs
     )
     v = parent + 1
+    seq = _next_seq(pm)
     files = keep + new_files
     seqs = pm.get("file_seq") or {}
     stats = {f: old_stats[f] for f in keep if f in old_stats}
     stats.update(new_stats)
     manifest = {
         "version": v,
+        "seq": seq,
         "parent": parent,
         "mode": "binpack",
         "stage": stage,
         "files": files,
         "file_seq": {
-            **{f: seqs.get(f, parent) for f in keep},
-            **{f: v for f in new_files},
+            **{f: seqs.get(f, seq - 1) for f in keep},
+            **{f: seq for f in new_files},
         },
         "deletes": [],
         "partition_by": partition_by,

@@ -517,3 +517,46 @@ def test_cfstable_refuses_timestamp_plus_branch(eng, spark):
     # engine surface mirrors the refusal for metadata listings too
     with pytest.raises(EngineIOError, match="numeric branch version"):
         eng.table_files("t", version="sometag", branch="b")
+
+
+def test_branch_append_outlives_inherited_mor_delete(eng, spark):
+    """A merge-on-read delete pending on main scopes itself to the files
+    that existed when it committed.  A branch forked after it restarts
+    its version numbers, but its appends must still sort AFTER the
+    inherited delete: every appended row survives the publish.  k 0-199
+    lands in two commits, so the delete is main's v3 while the branch's
+    append is its v2."""
+    eng.write_table_version(spark.range(0, 100).toDF("k"), "t")
+    eng.write_table_version(spark.range(100, 200).toDF("k"), "t", mode="append")
+    eng.delete_from("t", "k % 10 = 3", strategy="mor")
+    eng.create_table_branch("t", "b")
+    eng.write_table_version(
+        spark.range(1000, 1100).toDF("k"), "t", mode="append", branch="b"
+    )
+    eng.publish_branch("t", "b")
+    ks = {r.k for r in eng.read_version("t").collect()}
+    assert {k for k in ks if k >= 1000} == set(range(1000, 1100))
+    assert ks == {k for k in range(200) if k % 10 != 3} | set(range(1000, 1100))
+
+
+def test_mor_delete_after_publish_reaches_branch_files(eng, spark):
+    """After a branch with several commits is published, main's next
+    merge-on-read delete must see every published file as older than
+    itself — including the branch's files, whose seqs ran ahead of
+    main's version numbers."""
+    eng.write_table_version(spark.range(0, 50).toDF("k"), "t")
+    eng.create_table_branch("t", "b")
+    for lo in (100, 200, 300):
+        eng.write_table_version(
+            spark.range(lo, lo + 50).toDF("k"), "t", mode="append", branch="b"
+        )
+    eng.publish_branch("t", "b")
+    eng.delete_from("t", "k % 10 = 3", strategy="mor")
+    ks = {r.k for r in eng.read_version("t").collect()}
+    want = {
+        k
+        for lo in (0, 100, 200, 300)
+        for k in range(lo, lo + 50)
+        if k % 10 != 3
+    }
+    assert ks == want

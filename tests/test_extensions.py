@@ -511,17 +511,17 @@ def test_multimodal_corrupt_png_raises_typed_error(spark):
 
 
 def test_lsh_interleaved_pipelines_both_correct(spark):
-    """VERDICT r04 #5: two interleaved lsh_candidate_pairs pipelines —
-    the second call evicts the first's session-scoped band cache, which
-    must cost only recomputation, never correctness, when the first
-    frame is consumed afterwards."""
+    """VERDICT r04 #5: two interleaved lsh_candidate_pairs pipelines on
+    one session — each frame carries its own lazily-checkpointed band
+    table, so building the second before consuming the first must not
+    change either frame's pairs."""
     from cubefs_hadoop_spark.extensions.dedup import lsh_candidate_pairs
 
     docs = load(spark, SF_SMOKE, "documents")
     lo, hi = docs.filter(F.col("doc_id") < 250), docs.filter(F.col("doc_id") >= 250)
-    a = lsh_candidate_pairs(lo)   # caches bands for lo
-    b = lsh_candidate_pairs(hi)   # evicts lo's cache, caches hi's
-    got_a = {(r.da, r.db) for r in a.collect()}   # post-eviction consume
+    a = lsh_candidate_pairs(lo)
+    b = lsh_candidate_pairs(hi)   # built before a is consumed
+    got_a = {(r.da, r.db) for r in a.collect()}
     got_b = {(r.da, r.db) for r in b.collect()}
     # ground truth: fresh un-interleaved runs of the same pipelines
     want_a = {(r.da, r.db) for r in lsh_candidate_pairs(lo).collect()}
@@ -621,7 +621,18 @@ def test_ivf_persisted_index_full_probe_is_exact(spark, tmp_path):
     assert got == want and len(want) == 25
 
 
-def test_lsh_incremental_index_matches_full_run(spark, tmp_path):
+@pytest.mark.parametrize(
+    "in_batch",
+    [
+        # batch ids sort above the index's: cross pairs are (index, batch)
+        lambda c: c >= 400,
+        # batch ids sort below the index's: cross pairs are (batch,
+        # index), so the probe's least/greatest orientation is exercised
+        lambda c: c < 250,
+    ],
+    ids=["batch_ids_above_index", "batch_ids_below_index"],
+)
+def test_lsh_incremental_index_matches_full_run(spark, tmp_path, in_batch):
     """Incremental dedup: probing the persisted band index with a new
     batch yields EXACTLY the candidate pairs the full-corpus run would
     add for those docs — at the cost of signing only the batch."""
@@ -633,8 +644,8 @@ def test_lsh_incremental_index_matches_full_run(spark, tmp_path):
     )
 
     docs = load(spark, SF_SMOKE, "documents")
-    corpus = docs.filter(F.col("doc_id") < 400)
-    batch = docs.filter(F.col("doc_id") >= 400)
+    corpus = docs.filter(~in_batch(F.col("doc_id")))
+    batch = docs.filter(in_batch(F.col("doc_id")))
     idx = str(tmp_path / "lsh_index")
     lsh_build_index(corpus, idx)
 
@@ -644,11 +655,12 @@ def test_lsh_incremental_index_matches_full_run(spark, tmp_path):
     }
     full = {(r.da, r.db) for r in lsh_candidate_pairs(docs).collect()}
     old_only = {(r.da, r.db) for r in lsh_candidate_pairs(corpus).collect()}
-    want = {p for p in full if p[0] >= 400 or p[1] >= 400}
+    want = {p for p in full if in_batch(p[0]) or in_batch(p[1])}
     assert inc == want
     assert old_only | inc == full  # incremental delta completes the set
     assert inc, "fixture should produce cross-batch candidates"
-    assert any(p[0] < 400 for p in inc)  # genuine corpus-vs-batch pairs
+    # genuine corpus-vs-batch pairs
+    assert any(in_batch(p[0]) != in_batch(p[1]) for p in inc)
 
     # fold the batch in: a SECOND identical batch now collides with it
     lsh_index_append(batch, idx)
